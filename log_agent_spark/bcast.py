@@ -15,9 +15,10 @@ The repo's broadcast policy (SCALE.md "Relational surface") is:
   once it is not.
 
 The bound must be CHEAP — a parquet footer ``count()`` of a base table
-(metadata-only, no scan) rather than a count of the derived frame itself,
-which would execute the plan twice. Same pattern as the inline
-``_maybe_bcast`` in ``operators/graph.py`` (BFS frontier guard).
+(metadata-only, no scan), or a count the caller already holds, rather
+than a count of the derived frame itself, which would execute the plan
+twice. The graph operators' node-sized sides (PageRank ranks, the BFS
+frontier and visited set) route through here too.
 
 ``DEFAULT_BROADCAST_ROW_LIMIT``: 10M rows of 16-byte hashes ≈ 160 MB plus
 row overhead — comfortably inside a multi-GB executor, well past any

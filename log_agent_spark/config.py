@@ -10,8 +10,11 @@ list (plugin.go:112-168).
 
 Spark-first form: an ini file parsed into ``BizConfig`` dataclasses, a
 transform registry keyed by plugin prefix (BSI → bsi_parse; unknown prefix
-→ identity, the SPI precedent, plugins/SPI.go:1-11), and builders that turn
-a BizConfig into the batch ingest plan or the live streaming pipeline.
+→ identity, the SPI precedent, plugins/SPI.go:1-11), the batch ingest
+builder and the live file-event source. The live pipeline itself is wired
+in one place, ``__main__`` stream mode: ``read_file_events`` →
+``run_event_pipeline`` with ``__main__._stream_enrich`` as the transform,
+which reads each batch's files before the biz transform runs.
 
 ini layout (mirrors conf/logagent.ini keys; configparser needs the global
 keys in [GLOBAL] rather than header-less):
@@ -190,23 +193,3 @@ def read_file_events(spark: SparkSession, cfg: BizConfig) -> DataFrame:
         F.lit(False).alias("is_dir"),
     )
 
-
-def build_stream_pipeline(
-    events: DataFrame,
-    cfg: BizConfig,
-    multi_sink,
-    checkpoint_dir: str | None = None,
-):
-    """AutoInit for the live path (S1 → T1 → K6): starts the standing query.
-
-    ``events`` usually comes from ``read_file_events(spark, cfg)``.
-    """
-    from log_agent_spark.streaming.pipeline import run_event_pipeline
-
-    return run_event_pipeline(
-        events,
-        multi_sink,
-        transform=cfg.transform,
-        debounce_ms=cfg.debounce_ms or None,  # T7 bypass when 0
-        checkpoint_dir=checkpoint_dir,
-    )

@@ -23,7 +23,9 @@ chains/cliques/random graphs). The reference has no graph op (SURVEY.md
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window as W
@@ -33,6 +35,7 @@ from log_agent_spark.baskets import (
     capped_basket_items,
     capped_pp_sql,
 )
+from log_agent_spark.bcast import maybe_broadcast
 from log_agent_spark.scratch import (
     pin,
     pin_checkpoint,
@@ -41,6 +44,37 @@ from log_agent_spark.scratch import (
 )
 
 from log_agent_spark.sources.tables import load_table
+
+
+def _iterate_to_fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    witness: tuple[Column, ...],
+    max_iter: int,
+    what: str,
+) -> DataFrame:
+    """Apply ``step`` until the round's ``witness`` metrics repeat.
+
+    Every round is ONE job: the checkpoint materialization carries the
+    witness as an in-plan observe() metric (no separate agg pass), and the
+    checkpoint truncates lineage so round k's plan never nests the k-1
+    rounds before it. The witness must be a fixpoint detector — equal
+    values on consecutive rounds ⇒ the state stopped changing — and is the
+    only data that reaches the driver.
+
+    ``max_iter`` budgets CHANGING rounds. A fixpoint is observable only
+    one round after the state stabilizes, so up to max_iter + 1 rounds
+    run: a state converging exactly on round max_iter is not an error.
+    Exhausting the budget raises — the last state would be a silently
+    wrong answer (e.g. split components), never a usable approximation.
+    """
+    state, prev = pin_checkpoint_observed(state, *witness)
+    for _ in range(max_iter + 1):
+        state, cur = pin_checkpoint_observed(step(state), *witness)
+        if cur == prev:
+            return state
+        prev = cur
+    raise RuntimeError(f"{what} did not converge in {max_iter} rounds")
 
 
 def connected_components(
@@ -54,68 +88,47 @@ def connected_components(
     """(node → component) where component = min node id reachable.
 
     ``edges`` may be directed; it is symmetrized here. Isolated nodes keep
-    themselves as their component.
+    themselves as their component. Needs O(diameter) rounds and raises
+    past ``max_iter`` — unbounded-diameter graphs belong to
+    ``connected_components_star``.
     """
     sym = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    # r11 (guide §5 caching): PIN the symmetrized edge list — every
-    # propagation round is a separate checkpoint JOB, and exchange reuse
-    # only dedups within one job, so an unpinned sym re-executes its
-    # whole upstream (e.g. the quadratic levenshtein pair join in the
-    # dedup consumer) once per round. One materialization, O(rounds)
-    # cache reads; released by the caller's pinned_query wrapper (or
-    # owned by the caller when composed directly, as with Spark's own
-    # persist API).
+    # Pinned: every round is a separate checkpoint JOB and exchange reuse
+    # only dedups within one job, so an unpinned sym would re-execute its
+    # whole upstream (e.g. a quadratic pair join) once per round. The
+    # returned labels are checkpointed, so sym is released before
+    # returning; an enclosing pinned_query release is then a no-op.
     sym = pin(
         sym.union(
             sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct()
     )
 
-    # r10 (guide §2.4): the per-round convergence witness rides the
-    # checkpoint materialization as an in-plan observe() metric instead of
-    # a separate agg job — one pass per round, not two.
-    labels, m = pin_checkpoint_observed(
-        nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("comp")),
-        F.sum("comp").alias("s"),
-    )
-    prev_sum = m["s"]
-
-    converged = False
-    # max_iter budgets CHANGING (propagation) rounds; convergence is only
-    # observable one round AFTER labels stabilize, so run up to max_iter+1
-    # iterations — otherwise a graph converging exactly on round max_iter
-    # would raise despite being correctly labeled.
-    for _ in range(max_iter + 1):
+    def propagate(labels: DataFrame) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym.src == labels.node)
             .select(F.col("dst").alias("node"), "comp")
         )
-        # labels only ever decrease → the sum is a monotone convergence
-        # witness; one scalar to the driver per round, no row comparison.
-        labels, m = pin_checkpoint_observed(
+        return (
             labels.unionByName(nbr_min)
             .groupBy("node")
-            .agg(F.min("comp").alias("comp")),
-            F.sum("comp").alias("s"),
+            .agg(F.min("comp").alias("comp"))
         )
-        cur_sum = m["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # Min-label propagation needs O(diameter) rounds; exhausting the
-        # budget means a component wider than max_iter hops would get a
-        # silently-split labeling. Fail loudly — callers on unbounded-
-        # diameter graphs should use connected_components_star instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds the iteration budget); use "
-            "connected_components_star for diameter-independent convergence"
+
+    try:
+        # labels only ever decrease → their sum is a monotone witness
+        return _iterate_to_fixpoint(
+            nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("comp")),
+            propagate,
+            (F.sum("comp").alias("s"),),
+            max_iter,
+            "connected_components (min-label needs O(diameter) rounds; "
+            "connected_components_star needs O(log n))",
         )
-    return labels
+    finally:
+        sym.unpersist()
 
 
 def connected_components_star(
@@ -142,26 +155,6 @@ def connected_components_star(
 
     Output schema matches ``connected_components``: (node, comp).
     """
-    # (count, decimal hash-sum) convergence witness, collected in-plan by
-    # the SAME job that materializes the round's edge list (r10, guide
-    # §2.4 — the separate _edge_checksum agg cost one extra job per round).
-    _witness = (
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    )
-
-    def _key(m: dict) -> tuple[int, int]:
-        return (m["n"] or 0, int(m["h"] or 0))
-
-    e, m0 = pin_checkpoint_observed(
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        *_witness,
-    )
 
     def half_step(e: DataFrame, large: bool) -> DataFrame:
         """One star half-step as a PURE plan transform (no materialization)."""
@@ -189,26 +182,25 @@ def connected_components_star(
             )
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    prev = _key(m0)
-    for _ in range(max_iter):
-        # r11 (guide §2.4/§5): large-star ∘ small-star FUSED into one
-        # checkpoint materialization per round (was two). The large-star
-        # output's trailing distinct (Exchange by (u,v) + HashAggregate) is
-        # an identical subtree at every reference inside the small-star
-        # plan, so ReuseExchange/AQE stage reuse computes it ONCE within
-        # the fused job — the old per-half-step localCheckpoint bought no
-        # dedup, only an extra |E|-row block write + read + job barrier
-        # per round. The convergence witness was always taken from the
-        # small-star output only (the large-star witness was discarded),
-        # so round semantics and the O(log n) bound are unchanged.
-        e, mr = pin_checkpoint_observed(
-            half_step(half_step(e, large=True), large=False), *_witness
+    # One materialization per round for both half-steps: the large-star
+    # output's trailing distinct is an identical subtree at every
+    # reference inside the small-star plan, so exchange reuse computes it
+    # once within the round's job. The O(log n) bound is per fused round.
+    e = _iterate_to_fixpoint(
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
-        cur = _key(mr)
-        if cur == prev:
-            break
-        prev = cur
-
+        .filter(F.col("u") != F.col("v"))
+        .distinct(),
+        lambda e: half_step(half_step(e, large=True), large=False),
+        (
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+        ),
+        max_iter,
+        "connected_components_star",
+    )
     membership = e.select(F.col("v").alias("node"), F.col("u").alias("comp"))
     return (
         nodes.select(F.col(id_col).alias("node"))
@@ -262,9 +254,9 @@ _DEDUP_GRAPH_SQL = """d AS (
 def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min-label CC is safe here: _dedup_candidate_pairs bounds the graph
     # to ≤120 nodes at ANY scale (doc_id < 120), and its lang-grouped
-    # loose-prefix edges form near-cliques, so diameter ≪ max_iter; since
-    # r5, exhausting the budget RAISES instead of returning split labels,
-    # so a pathological fixture change fails loudly, never silently.
+    # loose-prefix edges form near-cliques, so diameter ≪ max_iter;
+    # exhausting the budget RAISES instead of returning split labels, so a
+    # pathological fixture change fails loudly, never silently.
     nodes, edges = _dedup_candidate_pairs(spark, sf_dir)
     comp = connected_components(nodes, edges, id_col="doc_id", max_iter=25)
     return comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
@@ -315,19 +307,17 @@ def q_graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would re-execute O(rounds × 3) times
     edges = pin(edges)
     is_delta = (F.col("src") * 131 + F.col("dst")) % _CC_IVM_DELTA_MOD == 0
-    # r10, widened r11 (guide §2.6 "overlap independent jobs"): the
-    # one-shot audit CC depends only on the pinned edges, while
-    # labels_old → merged is a sequential two-phase chain — so the
-    # one-shot's convergence loop runs on a driver thread from the START,
-    # overlapping BOTH phases (r10 overlapped only the merged phase):
+    # The one-shot audit CC depends only on the pinned edges, while labels_old
+    # → merged is a sequential two-phase chain — so the one-shot's convergence
+    # loop runs on a driver thread from the START, overlapping BOTH phases:
     # each loop's per-round checkpoint jobs backfill executor slots the
-    # other's round tail leaves idle; the scheduler interleaves them
-    # FIFO. The first jobs of both threads race to materialize the pin —
-    # Spark's cache block locking computes each partition once and blocks
-    # the other reader, so the pin is still computed once. The thread
-    # runs in a copy of this context, so its pins land in the SAME
-    # pinned_query release list (list.append is atomic), and
-    # inheritable_thread_target carries the JVM thread-locals.
+    # other's round tail leaves idle; the scheduler interleaves them FIFO. The
+    # first jobs of both threads race to materialize the pin — Spark's cache
+    # block locking computes each partition once and blocks the other reader,
+    # so the pin is still computed once. The thread runs in a copy of this
+    # context, so its pins land in the SAME pinned_query release list
+    # (list.append is atomic), and inheritable_thread_target carries the JVM
+    # thread-locals.
     import contextvars
     from concurrent.futures import ThreadPoolExecutor
 
@@ -495,9 +485,9 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # r10 (guide §2.4): out-degree as a window count over the key the edge
-    # list already shuffles on — the groupBy+join-back form re-exchanged
-    # the |E|-row edge list a second time (4 exchanges → 3).
+    # out-degree as a window count over the key the edge list already
+    # shuffles on: a groupBy+join-back would exchange the |E|-row edge
+    # list a second time.
     edges_deg = edges.withColumn(
         "deg", F.count("*").over(W.partitionBy("src"))
     ).transform(pin)
@@ -518,16 +508,12 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # When they fit in memory (n is already on the driver for the teleport
     # term), broadcasting them turns both per-iteration joins map-side —
     # the |E|-row edge table never shuffles, only the groupBy("dst")
-    # partial-agg does. Measured 2-4x at sf0.1 (9.4 s → 2-7 s). Web-scale
-    # graphs (n beyond the broadcast budget) keep the shuffle joins.
-    small = n <= 10_000_000
-
-    def _maybe_bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    # r10 (guide §1.1 first-principles): while the cust and supp+offset id
-    # spaces are DISJOINT, every edge points cust→supp, so the graph is a
-    # depth-1 DAG and the rank vector reaches its fixpoint at iteration 2:
+    # partial-agg does. Web-scale graphs (n beyond the broadcast budget)
+    # keep the shuffle joins.
+    #
+    # While the cust and supp+offset id spaces are DISJOINT, every edge
+    # points cust→supp, so the graph is a depth-1 DAG and the rank vector
+    # reaches its fixpoint at iteration 2:
     # sources (never a dst) hold r_k = t = (1-d)/n exactly from iteration 1
     # on (t + d·0.0 ≡ t in IEEE), hence every later contribution sum is
     # Σ t/deg(u) and r_3 = r_2 = t + d·Σ t/deg(u). The closed form below
@@ -547,7 +533,7 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        cb = _maybe_bcast(contribs)
+        cb = maybe_broadcast(contribs, n)
         ranks = nodes.join(cb, nodes.node == cb.dst, "left").select(
             "node",
             (F.lit(t) + PAGERANK_D * F.coalesce(F.col("s"), F.lit(0.0))).alias(
@@ -558,14 +544,14 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("r"))
     for _ in range(PAGERANK_ITERS):
-        rk = _maybe_bcast(ranks)
+        rk = maybe_broadcast(ranks, n)
         contribs = (
             edges_deg.join(rk, edges_deg.src == rk.node)
             .select("dst", (F.col("r") / F.col("deg")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        cb = _maybe_bcast(contribs)
+        cb = maybe_broadcast(contribs, n)
         ranks = (
             nodes.join(cb, nodes.node == cb.dst, "left")
             .select(
@@ -1013,10 +999,9 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    # r10 (guide §2.4): the seed (min src) rides the edge materialization
-    # as an observe() metric, and the edge list is checkpointed BEFORE the
-    # seed is needed — the old form ran a separate agg job that re-derived
-    # the whole orders⨝lineitem+distinct subtree just for one scalar.
+    # the seed (min src) rides the edge materialization as an observe()
+    # metric, so the orders⨝lineitem+distinct subtree runs once — a
+    # separate agg for one scalar would re-derive it.
     edges, m = pin_checkpoint_observed(
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .select(
@@ -1026,19 +1011,16 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct(),
         F.min("src").alias("seed"),
     )
-    # r11 (guide §2.3 "shuffle/scan fewer bytes"): while the two id
-    # spaces are DISJOINT (footer-checked, the pagerank closed-form
-    # pattern — TPC-H custkeys pass _SUPP_OFFSET around sf ≈ 7), the
-    # graph is bipartite, so a frontier of customers can only match the
-    # cust→supp direction and vice versa: probing the symmetrized union
-    # wastes HALF of every level's scan on rows whose src is in the other
-    # id space. Level k alternates direction (the seed = min src is a
-    # customer), each a zero-cost projection over the checkpointed edge
-    # blocks. Collided ids fall back to the symmetrized union — same
-    # rows, no bipartite structure to exploit.
-    # (r10 note kept: an explode-both-endpoints form measured +45% here —
-    # the union legs read the checkpointed edges, so the 2× union is two
-    # cache scans, not two derivations.)
+    # While the two id spaces are DISJOINT (footer-checked, the pagerank
+    # closed-form pattern — TPC-H custkeys pass _SUPP_OFFSET around sf ≈ 7),
+    # the graph is bipartite, so a frontier of customers can only match the
+    # cust→supp direction and vice versa: probing the symmetrized union wastes
+    # HALF of every level's scan on rows whose src is in the other id space.
+    # Level k alternates direction (the seed = min src is a customer), each a
+    # zero-cost projection over the checkpointed edge blocks. Collided ids
+    # fall back to the symmetrized union — same rows, no bipartite structure
+    # to exploit; its two legs read the checkpointed edges, so the union is
+    # two cache scans, not two derivations.
     from log_agent_spark.sources.tables import footer_column_max
 
     max_cust = footer_column_max(sf_dir, "orders", "o_custkey")
@@ -1053,22 +1035,21 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes_bound = footer_row_count(sf_dir, "customer") + footer_row_count(
         sf_dir, "supplier"
     )
-    small = n_nodes_bound <= 10_000_000
-
-    def _maybe_bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
     seed = m["seed"]
     visited = spark.createDataFrame([(seed, 0)], "node bigint, hop int")
     frontier = visited.select("node")
     for k in range(1, BFS_ITERS + 1):
-        fr = _maybe_bcast(frontier)
+        fr = maybe_broadcast(frontier, n_nodes_bound)
         probe = (edges if k % 2 == 1 else rev) if bipartite else und
         nxt = (
             probe.join(fr, probe.src == fr.node)
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(_maybe_bcast(visited.select("node")), "node", "left_anti")
+            .join(
+                maybe_broadcast(visited.select("node"), n_nodes_bound),
+                "node",
+                "left_anti",
+            )
             .select("node", F.lit(k).alias("hop"))
             .transform(pin)
         )

@@ -4,13 +4,10 @@ Copies each record's content to ``dest_root/sub_dir/filename`` (or a custom
 path function's output; empty ⇒ skip, file.go:49-54), then restores the
 source's mtime on the copy (Chtimes, file.go:79-88).
 
-Spark-first shape: ``foreachPartition``-style distributed writes via
-``mapInPandas`` would shuffle content through Python; instead the batch
-volume here is the micro-batch (bounded), so a driver-side loop over
-``toLocalIterator`` keeps memory at one-row-at-a-time while the upstream
-plan (the expensive part) stays distributed. For cluster-scale fan-out to a
-shared filesystem, swap in ``df.write.format('binaryFile')``-less
-per-partition writers; the sink interface (sinks/multi.py) is unchanged.
+Spark-first shape: the batch volume here is one micro-batch (bounded by
+maxFilesPerTrigger), so a driver-side loop over ``toLocalIterator`` holds
+one partition at a time while the upstream plan (the expensive part) stays
+distributed.
 """
 
 from __future__ import annotations

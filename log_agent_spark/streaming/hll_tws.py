@@ -17,7 +17,7 @@ windowed one). The value state is one 64-long vector per key — RocksDB
 holds ~0.5 KB/key, so a 100 M-key fleet is ~50 GB of executor-local
 state, far beyond what an exact distinct's per-key hash sets would need.
 
-Requires the same protobuf runtime as debounce_tws (compat.ensure_protobuf).
+Requires a protobuf runtime in the driver and workers (compat.ensure_protobuf).
 """
 
 from __future__ import annotations

@@ -22,7 +22,7 @@ Reference parity: the reference's watchdog debounces on PROCESSING time
 part of the streaming extension surface (SURVEY.md §2.3 note) that makes
 event-time semantics tunable.
 
-Requires the same protobuf runtime as debounce_tws (compat.ensure_protobuf).
+Requires a protobuf runtime in the driver and workers (compat.ensure_protobuf).
 """
 
 from __future__ import annotations

@@ -22,9 +22,9 @@ ALLOWED = {
         "distinct partition VALUES of one micro-batch — bounded by the "
         "partition-key cardinality (dates), never by row count",
     ("sinks/filecopy.py", "df.toLocalIterator()"):
-        "K3 driver-side file-copy form streams one partition at a time "
-        "(never the whole frame in memory); the executor-side DataSource "
-        "twin (filecopy_datasource.py) is the scale path",
+        "K3 file copy of one micro-batch (bounded by maxFilesPerTrigger), "
+        "streamed one partition at a time — never the whole frame in "
+        "driver memory",
     ("__main__.py", 'live.select("path").distinct().collect()'):
         "CLI convenience listing of WATCHED PATHS (config-scale, not "
         "data-scale)",

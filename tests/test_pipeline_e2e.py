@@ -52,34 +52,47 @@ def test_pipeline_quarantine_branch(spark, tmp_path):
 
 
 def test_config_driven_pipeline_from_file_events(spark, tmp_path):
-    """AutoInit parity: ini-style BizConfig → custom file_events source →
-    standing pipeline, end to end on a real directory."""
-    from log_agent_spark.config import BizConfig, build_stream_pipeline, read_file_events
+    """AutoInit parity on the agent's own wiring: a BSI BizConfig → custom
+    file_events source → run_event_pipeline with the stream-mode
+    enrichment (__main__._stream_enrich), end to end on a real directory.
+    The biz transform runs on enriched FileMeta rows, so the BSI test id
+    and the M7 checksum of the file's bytes reach the sink."""
+    import hashlib
+
+    from log_agent_spark.__main__ import _stream_enrich
+    from log_agent_spark.config import BizConfig, read_file_events
+    from log_agent_spark.functions.content import checksum
 
     watch = tmp_path / "watched"
-    watch.mkdir()
-    (watch / "a.log").write_bytes(b"hello")
-    (watch / "skip.tmp").write_bytes(b"nope")
+    test_id = "run_2017-06-07_16_15_42_797"
+    leaf = watch / "fam" / "model" / "2017-06-07" / test_id
+    leaf.mkdir(parents=True)
+    body = b"hello bsi"
+    (leaf / "a.log").write_bytes(body)
+    (leaf / "skip.tmp").write_bytes(b"nope")
 
     cfg = BizConfig(
-        name="SPI.TEST", watch=str(watch), patterns=r"\.log$", debounce_ms=0
+        name="BSI.TEST", watch=str(watch), patterns=r"\.log$", debounce_ms=0
     )
     delivered: list[tuple] = []
     chain = MultiSink(
         [Sink(name="rec", write=lambda df: delivered.extend(
-            (r.path, r.op, r.biz) for r in df.collect()))]
+            tuple(r) for r in df.select(
+                "filename", "bsi_test_id", checksum(F.col("content"))
+            ).collect()))]
     )
-    q = build_stream_pipeline(
+    q = run_event_pipeline(
         read_file_events(spark, cfg),
-        cfg,
         chain,
+        transform=_stream_enrich(cfg),
+        debounce_ms=cfg.debounce_ms or None,
         checkpoint_dir=str(tmp_path / "ckpt_cfg"),
     )
     try:
         deadline = time.time() + 60
         while time.time() < deadline and not delivered:
             time.sleep(1)
-        assert delivered == [(str(watch / "a.log"), "CREATE", "SPI")]
+        assert delivered == [("a.log", test_id, hashlib.md5(body).hexdigest())]
     finally:
         q.stop()
 

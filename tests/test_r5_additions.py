@@ -290,8 +290,8 @@ def test_er_features_tolerate_malformed_name(spark, tmp_path):
 
 
 def test_connected_components_raises_on_iteration_exhaustion(spark):
-    """Min-label CC must fail loudly when the graph diameter exceeds the
-    iteration budget instead of returning silently-split labels."""
+    """Both CC algorithms must fail loudly when they exhaust the iteration
+    budget instead of returning silently-split labels."""
     import pytest
 
     from log_agent_spark.operators.graph import (
@@ -309,6 +309,14 @@ def test_connected_components_raises_on_iteration_exhaustion(spark):
     # the star variant collapses the same chain in O(log n) rounds
     out = connected_components_star(nodes, edges, max_iter=6).collect()
     assert {r.comp for r in out} == {0}
+    # ... but a 200-node chain needs more than 2 star rounds
+    chain = 200
+    nodes = spark.createDataFrame([(i,) for i in range(chain)], "id long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(chain - 1)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(nodes, edges, max_iter=2).collect()
 
 
 def test_er_match_pairs_single_window_sort(spark):

@@ -67,6 +67,39 @@ def test_back_to_back_graph_queries_leave_no_blocks(spark, sf_dir):
         assert not leaked, f"{name} leaked: {leaked}"
 
 
+def test_direct_connected_components_releases_its_edge_pin(spark, monkeypatch):
+    """Called directly (no pinned_query wrapper), connected_components
+    leaves only its per-round checkpoints — owned by the caller, as with
+    Spark's own API — and releases the symmetrized edge list it pinned."""
+    import log_agent_spark.operators.graph as graph_mod
+    from log_agent_spark.scratch import _release_new
+
+    checkpoints: set[int] = set()
+    real = graph_mod.pin_checkpoint_observed
+
+    def recording(df, *metrics):
+        out, m = real(df, *metrics)
+        checkpoints.add(int(out._jdf.queryExecution().analyzed().rdd().id()))
+        return out, m
+
+    monkeypatch.setattr(graph_mod, "pin_checkpoint_observed", recording)
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    edges = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "src long, dst long")
+    before = _persistent_ids(spark)
+    try:
+        got = {
+            r.node: r.comp
+            for r in graph_mod.connected_components(nodes, edges).collect()
+        }
+        assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
+        leaked = _persistent_ids(spark) - before
+        assert checkpoints and leaked <= checkpoints, (
+            f"pins beyond the round checkpoints: {leaked - checkpoints}"
+        )
+    finally:
+        _release_new(spark, before)
+
+
 def test_no_raw_pins_in_query_modules():
     """Enforcement for the handle-based release design: a raw .persist()/
     .cache()/.localCheckpoint() inside a query module would compile, run
