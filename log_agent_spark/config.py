@@ -192,4 +192,3 @@ def read_file_events(spark: SparkSession, cfg: BizConfig) -> DataFrame:
         "mod_time",
         F.lit(False).alias("is_dir"),
     )
-
